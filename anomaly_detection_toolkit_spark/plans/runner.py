@@ -5,11 +5,14 @@ Per-partition verdict semantics mirror the reference's -1/+1 encoding
 ≥1 error-level violation; warnings leave it passing but are reported.
 
 Resumability (north-star requirement): a run is keyed by a snapshot id
-(content hash of the input's file listing — the parquet/Iceberg
-manifest analogue). The ledger records completed partitions; a re-run
-plans only the remainder by filtering on the partition column, which
-Catalyst turns into partition pruning on a Hive/Iceberg-partitioned
-table (only the remaining partitions' files are even listed).
+(for parquet the content hash of the input's file listing, for Iceberg
+the real snapshot id). The ledger records completed partitions; a
+re-run plans only the remainder by filtering on the partition column,
+which Catalyst turns into partition pruning on a Hive/Iceberg-
+partitioned table (only the remaining partitions' files are even
+listed). ``run_validation_job`` is the one job driver for both table
+sources: only the planning step (``plan_parquet`` /
+``sources.iceberg.plan_table``) differs.
 """
 
 from __future__ import annotations
@@ -17,7 +20,9 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass
+import uuid
+from dataclasses import dataclass, field
+from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -291,23 +296,30 @@ def run_suite(
 # ---------------------------------------------------------------------------
 
 
+def _listing_hash(root: str) -> str:
+    """Hash of the data-file listing under ``root``: relative path,
+    size and mtime of every file not starting with ``_`` or ``.``.
+    Name+size alone misses an in-place same-size rewrite (fixed-width
+    re-ingest); the mtime makes a touched file re-validate rather than
+    silently keep stale verdicts."""
+    import hashlib
+
+    h = hashlib.sha256()
+    for d, _dirs, files in sorted(os.walk(root)):
+        for fn in sorted(files):
+            if fn.startswith(("_", ".")):
+                continue
+            p = os.path.join(d, fn)
+            st = os.stat(p)
+            h.update(f"{os.path.relpath(p, root)}:{st.st_size}:{st.st_mtime_ns}".encode())
+    return h.hexdigest()[:16]
+
+
 def snapshot_id(input_path: str) -> str:
     """Content hash of the input file listing (path, size, mtime) —
     the manifest-fallback analogue of an Iceberg snapshot id (SURVEY
     §7.0: Iceberg runtime jar absent in this environment)."""
-    import hashlib
-
-    h = hashlib.sha256()
-    for root, _dirs, files in sorted(os.walk(input_path)):
-        for fn in sorted(files):
-            if fn.startswith(("_", ".")):
-                continue
-            p = os.path.join(root, fn)
-            st = os.stat(p)
-            h.update(
-                f"{os.path.relpath(p, input_path)}:{st.st_size}:{st.st_mtime_ns}".encode()
-            )
-    return h.hexdigest()[:16]
+    return _listing_hash(input_path)
 
 
 def partition_fingerprints(input_path: str, part_col: str = "part") -> dict[int, str]:
@@ -319,8 +331,6 @@ def partition_fingerprints(input_path: str, part_col: str = "part") -> dict[int,
     lets the ledger re-validate only partitions whose bytes actually
     changed instead of the whole table. Returns {} for a table that is
     not directory-partitioned (callers fall back to a full re-run)."""
-    import hashlib
-
     fps: dict[int, str] = {}
     prefix = f"{part_col}="
     if not os.path.isdir(input_path):
@@ -330,29 +340,15 @@ def partition_fingerprints(input_path: str, part_col: str = "part") -> dict[int,
         if not (entry.startswith(prefix) and os.path.isdir(full)):
             continue
         try:
-            part = int(entry[len(prefix):])
+            fps[int(entry[len(prefix):])] = _listing_hash(full)
         except ValueError:
             continue
-        h = hashlib.sha256()
-        for root, _dirs, files in sorted(os.walk(full)):
-            for fn in sorted(files):
-                if fn.startswith(("_", ".")):
-                    continue
-                p = os.path.join(root, fn)
-                st = os.stat(p)
-                # name+size alone misses an in-place same-size rewrite
-                # (fixed-width re-ingest): include mtime so a touched
-                # partition re-validates rather than silently keeping
-                # stale verdicts
-                h.update(
-                    f"{os.path.relpath(p, full)}:{st.st_size}:{st.st_mtime_ns}".encode()
-                )
-        fps[part] = h.hexdigest()[:16]
     return fps
 
 
 class Ledger:
-    """JSON manifest: snapshot id + completed partitions + output lineage."""
+    """JSON manifest: snapshot id + completed partitions + output
+    lineage. The only code that writes ``ledger.json``."""
 
     def __init__(self, ledger_dir: str):
         self.dir = ledger_dir
@@ -365,111 +361,115 @@ class Ledger:
         return {"snapshot_id": None, "completed_parts": [], "runs": []}
 
     def save(self, state: dict) -> None:
+        # a temp file unique to this call: concurrent savers never share
+        # (and rename away) one another's .tmp, and os.replace publishes
+        # only a fully written file, so a reader never sees a torn ledger
         os.makedirs(self.dir, exist_ok=True)
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.path)
+        tmp = f"{self.path}.{uuid.uuid4().hex}.tmp"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(state, f, indent=1, sort_keys=True)
+            os.replace(tmp, self.path)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
 
-    def remaining_parts(self, snap: str, all_parts: list[int]) -> list[int]:
-        state = self.load()
-        if state["snapshot_id"] != snap:
-            return list(all_parts)  # new snapshot → full re-run
-        done = set(state["completed_parts"])
-        return [p for p in all_parts if p not in done]
-
-    def remaining_parts_incremental(
-        self, snap: str, all_parts: list[int], fps: dict[int, str]
+    def remaining_parts(
+        self, snap, all_parts: list[int], fps: dict[int, str] | None = None
     ) -> list[int]:
-        """Incremental planning: on a NEW snapshot, re-validate only
-        partitions that are new, were never completed, or whose file
-        fingerprint changed since they were validated. A legacy ledger
-        without fingerprints (or a non-directory-partitioned table,
-        fps={}) degrades to the full re-run of ``remaining_parts``."""
+        """Partitions to validate for snapshot ``snap``. Same snapshot:
+        the ones not completed yet (resume). New snapshot: the ones
+        never completed or whose current fingerprint in ``fps`` differs
+        from the recorded one. A part without a fingerprint always
+        re-runs, so ``fps`` empty (non-incremental run, table not
+        directory-partitioned) plans the full table."""
         state = self.load()
         done = set(state["completed_parts"])
         if state["snapshot_id"] == snap:
             return [p for p in all_parts if p not in done]
+        fps = fps or {}
         recorded = state.get("part_fingerprints", {})
         return [
             p
             for p in all_parts
-            if p not in done
-            or recorded.get(str(p)) is None
-            or recorded.get(str(p)) != fps.get(p)
+            if p not in done or fps.get(p) is None or recorded.get(str(p)) != fps[p]
         ]
 
     def record(
         self,
-        snap: str,
+        snap,
         parts: list[int],
         outputs: dict[str, str],
         fingerprints: dict[int, str] | None = None,
-        carry_fps: dict[int, str] | None = None,
         table_schema: dict[str, str] | None = None,
         run_seq: int | None = None,
+        all_parts: Iterable[int] = (),
+        todo: Iterable[int] = (),
     ) -> None:
         """Record completed ``parts`` under snapshot ``snap``.
 
-        ``carry_fps`` (the CURRENT per-partition fingerprints) switches
-        a snapshot advance from "reset everything" to the incremental
-        semantics: completed parts whose recorded fingerprint still
-        matches the current one stay completed; only stale entries are
-        dropped. ``fingerprints`` records the validated parts' hashes
-        for future incremental runs."""
+        One advance rule for every planner: when the snapshot moves,
+        the completed set becomes ``parts`` plus the completed parts
+        that still exist (``all_parts``) but were not planned
+        (``todo``) — the planner judged their data unchanged, so their
+        verdicts carry. Recorded fingerprints stay only for those
+        carried parts; a part gone from the table leaves the ledger.
+        Called without ``all_parts`` nothing carries and a new snapshot
+        starts from scratch. The validated parts' hashes in
+        ``fingerprints`` are kept for the next incremental plan."""
         state = self.load()
         if state["snapshot_id"] != snap:
-            # completed parts reset (or carry forward under carry_fps)
-            # but the RUN history, run-seq counter and recorded schema
-            # survive snapshot advances: run_seq must stay monotonic
-            # or sink rows from different snapshots would collide on
-            # the same run_seq (history_drift keys its
-            # current-vs-history split on it), and the schema baseline
-            # must outlive the snapshot or evolution at a snapshot
-            # boundary — the common case — would never be diffed
-            keep_keys = {
-                k: state[k]
-                for k in ("runs", "next_run_seq", "table_schema")
-                if k in state
+            carried = (set(all_parts) - set(todo)) & set(state["completed_parts"])
+            state["snapshot_id"] = snap
+            state["completed_parts"] = sorted(carried)
+            state["part_fingerprints"] = {
+                k: v
+                for k, v in state.get("part_fingerprints", {}).items()
+                if int(k) in carried
             }
-            if carry_fps is not None:
-                recorded = state.get("part_fingerprints", {})
-                keep = [
-                    p
-                    for p in state["completed_parts"]
-                    if recorded.get(str(p)) is not None
-                    and recorded.get(str(p)) == carry_fps.get(p)
-                ]
-                state = {
-                    "snapshot_id": snap,
-                    "completed_parts": keep,
-                    "part_fingerprints": {str(p): recorded[str(p)] for p in keep},
-                    **keep_keys,
-                }
-            else:
-                state = {
-                    "snapshot_id": snap,
-                    "completed_parts": [],
-                    **keep_keys,
-                }
-        state["completed_parts"] = sorted(set(state["completed_parts"]) | set(parts))
-        if fingerprints:
-            pf = state.setdefault("part_fingerprints", {})
-            pf.update({str(p): v for p, v in fingerprints.items()})
+            # the run log, run-seq counter and recorded schema survive
+            # snapshot advances: run_seq must stay monotonic or sink
+            # rows from different snapshots would collide on the same
+            # run_seq (history_drift keys its current-vs-history split
+            # on it), and the schema baseline must outlive the snapshot
+            # or evolution at a snapshot boundary — the common case —
+            # would never be diffed
+        state["completed_parts"] = sorted(
+            set(state["completed_parts"]) | {int(p) for p in parts}
+        )
+        fingerprints = fingerprints or {}
+        state.setdefault("part_fingerprints", {}).update(
+            {str(p): fingerprints[p] for p in parts if p in fingerprints}
+        )
         if table_schema is not None:
             state["table_schema"] = table_schema
+        self._log_run(state, snap, parts, outputs, run_seq)
+
+    def record_schema_change(
+        self, snap, table_schema: dict[str, str], outputs: dict[str, str], run_seq: int
+    ) -> None:
+        """Log a metadata-only run: advance ONLY the schema baseline and
+        the run log — snapshot_id and completed_parts are the planner's
+        bookkeeping and a run that validated no data must not disturb
+        them."""
+        state = self.load()
+        state["table_schema"] = table_schema
+        self._log_run(state, snap, [], outputs, run_seq, schema_only=True)
+
+    def _log_run(self, state, snap, parts, outputs, run_seq, **extra) -> None:
+        runs = state.setdefault("runs", [])
         # default past BOTH the run log and any burned reservation —
         # a crashed job's reserved seq tagged sink rows, so minting it
         # again would collide in every history baseline
         seq = (
-            max(len(state["runs"]), int(state.get("next_run_seq", 0)))
+            max(len(runs), int(state.get("next_run_seq", 0)))
             if run_seq is None
             else int(run_seq)
         )
-        state["runs"].append(
+        runs.append(
             {"ts": time.time(), "run_seq": seq,
-             "snapshot_id": snap, "parts": sorted(parts),
-             "outputs": outputs}
+             "snapshot_id": snap, "parts": sorted(int(p) for p in parts),
+             "outputs": outputs, **extra}
         )
         state["next_run_seq"] = max(int(state.get("next_run_seq", 0)), seq + 1)
         self.save(state)
@@ -632,18 +632,37 @@ def record_schema_only_change(
     schema_evolution_violations(spark, prev_schema, cur_schema).withColumn(
         "run_seq", F.lit(run_seq)
     ).withColumn("snapshot_id", F.lit(str(snap))).write.mode("append").parquet(path)
-    # advance ONLY the schema baseline + run log — snapshot_id and
-    # completed_parts are the validation planner's bookkeeping and a
-    # metadata-only run must not disturb them
-    state = ledger.load()
-    state["table_schema"] = cur_schema
-    state.setdefault("runs", []).append(
-        {"ts": time.time(), "run_seq": run_seq, "snapshot_id": snap,
-         "parts": [], "outputs": {"violations": path},
-         "schema_only": True}
-    )
-    ledger.save(state)
+    ledger.record_schema_change(snap, cur_schema, {"violations": path}, run_seq)
     return True
+
+
+@dataclass
+class TablePlan:
+    """A table source's planning step, handed to the job driver."""
+
+    df: DataFrame
+    snap: str | int
+    all_parts: list[int]
+    todo: list[int]
+    fingerprints: dict[int, str] = field(default_factory=dict)
+
+
+def plan_parquet(
+    spark: SparkSession,
+    input_path: str,
+    ledger: Ledger,
+    part_col: str = "part",
+    incremental: bool = False,
+) -> TablePlan:
+    """Parquet planning: the file-listing hash is the snapshot id;
+    ``incremental`` adds per-``part=`` fingerprints so a new snapshot
+    plans only new or changed partitions."""
+    df = spark.read.parquet(input_path)
+    snap = snapshot_id(input_path)
+    all_parts = sorted(r[0] for r in df.select(part_col).distinct().collect())
+    fps = partition_fingerprints(input_path, part_col) if incremental else {}
+    todo = ledger.remaining_parts(snap, all_parts, fps)
+    return TablePlan(df, snap, all_parts, todo, fps)
 
 
 def run_validation_job(
@@ -654,33 +673,41 @@ def run_validation_job(
     part_col: str = "part",
     incremental: bool = False,
     violations_cap: int | None = None,
+    table_format: str = "parquet",
+    snapshot_id: int | None = None,
 ) -> SuiteResult | None:
-    """Resumable end-to-end job: plan remaining partitions from the
-    ledger, run the suite, append outputs, record completion.
+    """Resumable end-to-end job for parquet and Iceberg tables: plan
+    the partitions to run, run the suite, append outputs, record
+    completion. Only planning depends on ``table_format``: "parquet"
+    (``plan_parquet``; ``incremental=True`` re-validates only new or
+    changed ``part=`` directories on a new snapshot) or "iceberg"
+    (``sources.iceberg.plan_table``: ``input_path`` is a table name,
+    read pinned to ``snapshot_id``, default current; needs the jar).
 
-    ``incremental=True`` plans a NEW snapshot with per-partition file
-    fingerprints (Iceberg incremental-scan analogue): only new or
-    changed ``part=`` directories are re-validated — an append-mostly
-    10^12-row table revalidates one day's partition, not its history.
-
-    Returns None if the ledger says everything is already validated
-    for the current snapshot (idempotent re-run)."""
-    from anomaly_detection_toolkit_spark.plans.checks import default_suite
+    Returns None when there is nothing to validate: the snapshot is
+    already validated (idempotent re-run) or the Iceberg table is
+    empty."""
+    from anomaly_detection_toolkit_spark.plans.checks import (
+        default_suite,
+        schema_evolution_violations,
+    )
 
     checks = checks or default_suite()
-    df = spark.read.parquet(input_path)
-    snap = snapshot_id(input_path)
     ledger = Ledger(os.path.join(output_dir, "_ledger"))
-    all_parts = sorted(r[0] for r in df.select(part_col).distinct().collect())
-    fps: dict[int, str] = {}
-    if incremental:
-        fps = partition_fingerprints(input_path, part_col)
-        todo = ledger.remaining_parts_incremental(snap, all_parts, fps)
+    if table_format == "parquet":
+        plan = plan_parquet(spark, input_path, ledger, part_col, incremental)
+    elif table_format == "iceberg":
+        from anomaly_detection_toolkit_spark.sources.iceberg import plan_table
+
+        plan = plan_table(spark, input_path, ledger, part_col, snapshot_id)
+        if plan is None:
+            return None
     else:
-        todo = ledger.remaining_parts(snap, all_parts)
+        raise ValueError(f"unknown table_format {table_format!r}")
+    df, snap = plan.df, plan.snap
     cur_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     prev_schema = ledger.load().get("table_schema")
-    if not todo:
+    if not plan.todo:
         # no data to (re-)validate — but an in-place schema change
         # (the metadata-only evolution case) must still be reported
         # and the recorded baseline advanced
@@ -689,7 +716,7 @@ def run_validation_job(
         )
         return None
     result = run_suite(
-        df, checks, part_col=part_col, parts=todo, violations_cap=violations_cap
+        df, checks, part_col=part_col, parts=plan.todo, violations_cap=violations_cap
     )
     # run lineage: every appended sink row carries which run (a
     # monotonically increasing per-output-dir sequence, RESERVED in
@@ -699,10 +726,6 @@ def run_validation_job(
     run_seq = ledger.reserve_run_seq()
     # undeclared schema evolution vs the previous run (metadata-only;
     # warning rows — the declared SchemaCheck stays the error gate)
-    from anomaly_detection_toolkit_spark.plans.checks import (
-        schema_evolution_violations,
-    )
-
     evo = schema_evolution_violations(spark, prev_schema, cur_schema)
     outputs = {}
     for name, out_df in (
@@ -719,10 +742,11 @@ def run_validation_job(
         snap,
         result.parts_checked,
         outputs,
-        fingerprints={p: fps[p] for p in result.parts_checked if p in fps} or None,
-        carry_fps=fps if incremental else None,
+        fingerprints=plan.fingerprints,
         table_schema=cur_schema,
         run_seq=run_seq,
+        all_parts=plan.all_parts,
+        todo=plan.todo,
     )
     # outputs are materialized — release the shared narrow-projection
     # cache (violations/metrics stay persisted for the caller)

@@ -11,16 +11,18 @@ availability-gated seam:
   through ``spark.read.format("iceberg")`` with the documented
   ``snapshot-id`` read option, and planning reads the standard
   ``<table>.snapshots`` / ``<table>.entries`` metadata tables.
-- Locally: ``plans.runner`` keeps its manifest fallback
-  (``snapshot_id()`` file-listing hash + per-partition fingerprints),
-  and ``read_table`` raises a clear error instead of guessing.
+- Locally: ``read_table`` raises a clear error instead of guessing;
+  parquet tables plan with ``plans.runner.plan_parquet``.
 
-Everything decision-making here — the snapshot ancestry walk, the
-changed-partition computation, the ledger advance — is pure code over
-metadata-SHAPED inputs (tiny driver-side snapshot log; a DataFrame
-with Iceberg's documented ``entries`` columns), so the exact logic the
-cluster path runs is unit-tested against synthetic metadata in
-``tests/test_iceberg.py`` without the jar.
+Only PLANNING is Iceberg-specific: ``plan_table`` hands the one job
+driver (``plans.runner.run_validation_job``) a pinned read, its
+snapshot id and the partitions to run; the ledger advance is the
+shared ``Ledger.record``. The planning logic — ancestry walk,
+changed-partition computation, plan from the ledger state — is pure
+code over metadata-SHAPED inputs (tiny driver-side snapshot log; a
+DataFrame with Iceberg's documented ``entries`` columns), so the exact
+logic the cluster path runs is unit-tested against synthetic metadata
+in ``tests/test_iceberg.py`` without the jar.
 
 Scale notes (10^12-row table):
 - the ``snapshots`` metadata table is tiny (one row per commit —
@@ -38,11 +40,12 @@ scope (SURVEY §3.4, §7.0 non-goal lifted to a seam here).
 
 from __future__ import annotations
 
-import time
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from anomaly_detection_toolkit_spark.plans.runner import Ledger, TablePlan
 
 # iceberg entries.status codes (Iceberg spec, manifest entry status)
 STATUS_EXISTING, STATUS_ADDED, STATUS_DELETED = 0, 1, 2
@@ -265,160 +268,53 @@ def plan_incremental_parts(
 
 
 # ---------------------------------------------------------------------------
-# Resumable job wiring (reuses plans.runner's Ledger + run_suite)
+# Planning step of the shared job driver (plans.runner.run_validation_job)
 # ---------------------------------------------------------------------------
 
 
-def run_validation_job_iceberg(
-    spark: SparkSession,
-    table: str,
-    output_dir: str,
-    checks=None,
+def plan_from_ledger(
+    snapshots_df: DataFrame,
+    entries_df: DataFrame,
+    ledger: Ledger,
+    current: int,
+    all_parts: Iterable[int],
     part_col: str = "part",
-    snapshot_id: int | None = None,
-    violations_cap: int | None = None,
-):
-    """Iceberg-native variant of ``runner.run_validation_job``.
-
-    Pins the read to ``snapshot_id`` (default: current), plans the
-    remaining partitions from the ledger + snapshot log, runs the
-    suite, appends outputs, records completion under the REAL
-    snapshot id. Requires the runtime jar (``iceberg_available``).
-    """
-    import os
-
-    from anomaly_detection_toolkit_spark.plans.checks import default_suite
-    from anomaly_detection_toolkit_spark.plans.runner import Ledger, run_suite
-
-    snapshots_df, entries_df = load_metadata(spark, table)
-    snap = snapshot_id if snapshot_id is not None else current_snapshot_id(snapshots_df)
-    if snap is None:
-        return None  # empty table, nothing to validate
-    df = read_table(spark, table, snapshot_id=snap)
-    all_parts = sorted(r[0] for r in df.select(part_col).distinct().collect())
-
-    ledger = Ledger(os.path.join(output_dir, "_ledger"))
+) -> list[int]:
+    """``plan_incremental_parts`` from the ledger's recorded snapshot
+    and completed parts. A ledger last written for a parquet table
+    holds a file-listing hash, not an Iceberg snapshot id — it is no
+    ancestor of anything, so the whole table runs."""
     state = ledger.load()
     try:
-        last = int(state["snapshot_id"]) if state["snapshot_id"] is not None else None
+        last = None if state["snapshot_id"] is None else int(state["snapshot_id"])
     except (TypeError, ValueError):
-        # a manifest-fallback (hex-string) ledger in the same output
-        # dir: not an Iceberg ancestor — plan a full re-run
-        last = None
-    todo = plan_incremental_parts(
+        return [int(p) for p in all_parts]
+    return plan_incremental_parts(
         snapshots_df,
         entries_df,
         last,
-        int(snap),
+        int(current),
         state["completed_parts"],
         all_parts,
         part_col,
     )
-    cur_schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    if not todo:
-        # Iceberg ALTER TABLE (add/rename/promote column) creates no
-        # new data files and often no data commit — the planner sees
-        # nothing to validate, but the in-place evolution must still
-        # be reported and the recorded schema baseline advanced
-        from anomaly_detection_toolkit_spark.plans.runner import (
-            record_schema_only_change,
-        )
 
-        record_schema_only_change(
-            spark, ledger, int(snap), state.get("table_schema"),
-            cur_schema, output_dir,
-        )
+
+def plan_table(
+    spark: SparkSession,
+    table: str,
+    ledger: Ledger,
+    part_col: str = "part",
+    snapshot_id: int | None = None,
+) -> TablePlan | None:
+    """Pin the read to ``snapshot_id`` (default: current) and plan the
+    partitions to validate from the ledger + snapshot log. None for a
+    table with no snapshot yet. Requires the runtime jar."""
+    snapshots_df, entries_df = load_metadata(spark, table)
+    snap = snapshot_id if snapshot_id is not None else current_snapshot_id(snapshots_df)
+    if snap is None:
         return None
-    result = run_suite(
-        df,
-        checks or default_suite(),
-        part_col=part_col,
-        parts=todo,
-        violations_cap=violations_cap,
-    )
-    # run lineage columns (see plans/runner.run_validation_job): here
-    # snapshot_id is the REAL Iceberg snapshot the read was pinned to,
-    # and the seq is reserved in the ledger BEFORE sink writes so a
-    # crash mid-job can never lead to a reused run_seq
-    run_seq = ledger.reserve_run_seq()
-    # undeclared schema evolution vs the previous run's recorded
-    # schema (Iceberg tables evolve schemas in-place; metadata-only)
-    from anomaly_detection_toolkit_spark.plans.checks import (
-        schema_evolution_violations,
-    )
-
-    evo = schema_evolution_violations(spark, state.get("table_schema"), cur_schema)
-    outputs = {}
-    for name, out_df in (
-        ("verdicts", result.verdicts),
-        ("violations", result.violations.unionByName(evo)),
-        ("metrics", result.metrics),
-    ):
-        path = os.path.join(output_dir, name)
-        out_df.withColumn("run_seq", F.lit(run_seq)).withColumn(
-            "snapshot_id", F.lit(str(snap))
-        ).write.mode("append").parquet(path)
-        outputs[name] = path
-    record_iceberg(
-        ledger, int(snap), result.parts_checked, set(todo), outputs,
-        table_schema=cur_schema, run_seq=run_seq,
-    )
-    for d in result.cached:
-        d.unpersist()
-    return result
-
-
-def record_iceberg(
-    ledger,
-    snap: int,
-    validated_parts: list[int],
-    planned_parts: set[int],
-    outputs: dict[str, str],
-    table_schema: dict[str, str] | None = None,
-    run_seq: int | None = None,
-) -> None:
-    """Advance the ledger to Iceberg snapshot ``snap``.
-
-    On a snapshot change, completed parts the planner did NOT schedule
-    (their data is unchanged per the snapshot log) carry forward —
-    the iceberg-metadata analogue of ``Ledger.record(carry_fps=...)``.
-    """
-    state = ledger.load()
-    if state["snapshot_id"] != snap:
-        keep = [p for p in state["completed_parts"] if p not in planned_parts]
-        state = {
-            "snapshot_id": snap,
-            "completed_parts": keep,
-            # run history, the reserved-seq counter and the schema
-            # baseline all survive snapshot advances (same keep-set as
-            # Ledger.record — dropping next_run_seq here would let a
-            # burned reservation's seq be minted again)
-            **{
-                k: state[k]
-                for k in ("runs", "next_run_seq", "table_schema")
-                if k in state
-            },
-        }
-    state["completed_parts"] = sorted(
-        set(state["completed_parts"]) | set(int(p) for p in validated_parts)
-    )
-    if table_schema is not None:
-        state["table_schema"] = table_schema
-    # same default rule as Ledger.record: never re-mint a seq a
-    # crashed job already burned via reserve_run_seq
-    seq = (
-        max(len(state["runs"]), int(state.get("next_run_seq", 0)))
-        if run_seq is None
-        else int(run_seq)
-    )
-    state["runs"].append(
-        {
-            "ts": time.time(),
-            "run_seq": seq,
-            "snapshot_id": snap,
-            "parts": sorted(int(p) for p in validated_parts),
-            "outputs": outputs,
-        }
-    )
-    state["next_run_seq"] = max(int(state.get("next_run_seq", 0)), seq + 1)
-    ledger.save(state)
+    df = read_table(spark, table, snapshot_id=snap)
+    all_parts = sorted(r[0] for r in df.select(part_col).distinct().collect())
+    todo = plan_from_ledger(snapshots_df, entries_df, ledger, snap, all_parts, part_col)
+    return TablePlan(df, int(snap), all_parts, todo)

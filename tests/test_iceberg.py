@@ -4,7 +4,8 @@ The Iceberg runtime jar is absent here (SURVEY §7.0), so these tests
 build DataFrames with exactly Iceberg's documented ``snapshots`` /
 ``entries`` metadata schemas and verify the planning code the cluster
 path would run: ancestry walk, snapshot delta, changed-partition
-computation, incremental plan, and the ledger advance.
+computation, incremental plan, the plan from ledger state, and the
+ledger advance.
 """
 
 from __future__ import annotations
@@ -146,22 +147,61 @@ def test_plan_incremental(snap_log, entry_log):
     assert todo == [0, 1, 2]
 
 
-def test_record_iceberg_carries_unchanged_parts(tmp_path):
+def test_ledger_record_carries_unchanged_parts(tmp_path):
     ledger = Ledger(str(tmp_path))
     # first full run at snapshot 20
-    ice.record_iceberg(ledger, 20, [0, 1, 2], planned_parts={0, 1, 2}, outputs={})
+    ledger.record(20, [0, 1, 2], {}, all_parts=[0, 1, 2], todo=[0, 1, 2])
     state = ledger.load()
     assert state["snapshot_id"] == 20 and state["completed_parts"] == [0, 1, 2]
     # snapshot 30 replanned only part 1: parts 0,2 carry forward
-    ice.record_iceberg(ledger, 30, [1], planned_parts={1}, outputs={})
+    ledger.record(30, [1], {}, all_parts=[0, 1, 2], todo=[1])
     state = ledger.load()
     assert state["snapshot_id"] == 30
     assert state["completed_parts"] == [0, 1, 2]
     assert len(state["runs"]) == 2
     # a crash before completing part 1 at snap 30 would have left it
     # out of completed_parts; simulate the resume bookkeeping
-    ice.record_iceberg(ledger, 40, [], planned_parts={0, 1, 2}, outputs={})
+    ledger.record(40, [], {}, all_parts=[0, 1, 2], todo=[0, 1, 2])
     assert ledger.load()["completed_parts"] == []
+    # a partition dropped from the table leaves the completed set
+    ledger.record(50, [0, 1, 2], {}, all_parts=[0, 1, 2], todo=[0, 1, 2])
+    ledger.record(60, [1], {}, all_parts=[0, 1], todo=[1])
+    assert ledger.load()["completed_parts"] == [0, 1]
+
+
+def test_plan_from_ledger(snap_log, entry_log, expired_log, expired_entries, tmp_path):
+    """The Iceberg plan reads the ledger the shared job driver wrote."""
+    ledger = Ledger(str(tmp_path))
+    # a ledger at snapshot 20 moving to 30: only the rewritten part 1
+    ledger.record(20, [0, 1, 2], {}, all_parts=[0, 1, 2], todo=[0, 1, 2])
+    assert ice.plan_from_ledger(snap_log, entry_log, ledger, 30, [0, 1, 2]) == [1]
+    # a ledger written for a parquet table (file-listing hex hash, no
+    # Iceberg ancestor) in the same output dir: full run, even for a
+    # completed part the retained snapshot log never touched
+    state = ledger.load()
+    state["snapshot_id"] = "3f9a0c1e7b2d4a65"
+    ledger.save(state)
+    assert ice.plan_from_ledger(snap_log, entry_log, ledger, 30, [0, 1, 2]) == [0, 1, 2]
+    assert ice.plan_from_ledger(
+        expired_log, expired_entries, ledger, 50, [0, 3, 4]
+    ) == [0, 3, 4]
+
+
+def test_validate_cli_iceberg_without_jar(spark, tmp_path, monkeypatch, capsys):
+    """--format iceberg on a session without the runtime jar exits 2
+    with the jar status and writes nothing."""
+    import os
+
+    import validate
+
+    monkeypatch.setattr(validate, "get_spark", lambda *a, **k: spark)
+    out = tmp_path / "out"
+    rc = validate.main(
+        ["--format", "iceberg", "--input", "cat.db.t", "--output", str(out)]
+    )
+    assert rc == 2
+    assert "ABSENT from this session's classpath" in capsys.readouterr().out
+    assert not os.path.exists(out)
 
 
 # ---------------------------------------------------------------------------

@@ -241,6 +241,30 @@ def test_incremental_ledger_revalidates_only_changed_parts(spark, tmp_path):
     assert r4 is not None and r4.parts_checked == [0, 1, 2, 3, 4]
 
 
+def test_incremental_ledger_drops_deleted_part(spark, tmp_path):
+    """Deleting a ``part=`` directory drops that part from the ledger's
+    completed set (and its fingerprint) on the next recorded advance,
+    while the untouched part carries."""
+    import os
+    import shutil
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    images.write_images(spark, src, 300, n_parts=3)
+    suite = [C.ReferentialCheck()]
+    r1 = R.run_validation_job(spark, src, out, checks=suite, incremental=True)
+    assert r1 is not None and r1.parts_checked == [0, 1, 2]
+
+    shutil.rmtree(f"{src}/part=2")
+    f0 = next(f for f in os.listdir(f"{src}/part=1") if f.endswith(".parquet"))
+    shutil.copy(f"{src}/part=1/{f0}", f"{src}/part=1/part-extra.parquet")
+    r2 = R.run_validation_job(spark, src, out, checks=suite, incremental=True)
+    assert r2 is not None and r2.parts_checked == [1]
+    state = R.Ledger(f"{out}/_ledger").load()
+    assert state["completed_parts"] == [0, 1]
+    assert set(state["part_fingerprints"]) == {"0", "1"}
+
+
 def test_northstar_oracle_assumptions(spark):
     """Pin the two dataset-level facts the flagship's ground-truth
     DuckDB oracle (entry_suite._NORTHSTAR_SQL) relies on at the

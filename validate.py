@@ -7,7 +7,10 @@ Runs the resumable validation job (SURVEY §3.4): plan the remaining
 partitions from the ledger, run the default check suite, append
 verdicts/violations/metrics parquet, record the ledger entry. A
 re-run over an unchanged snapshot is a no-op; a changed snapshot
-(new/modified input files) re-validates everything.
+(new/modified input files) re-validates everything, or with
+--incremental (always, for --format iceberg) only the changed
+partitions. Parquet and Iceberg tables run the same job
+(``plans.runner.run_validation_job``); only the planning differs.
 
 Under spark-submit the cluster master is inherited; run directly
 (``python validate.py``) it falls back to local[all-cores].
@@ -23,8 +26,16 @@ from pathlib import Path
 # allow running both from the repo and as a --py-files zip deployment
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from anomaly_detection_toolkit_spark.plans.runner import run_validation_job  # noqa: E402
+from anomaly_detection_toolkit_spark.plans.runner import (  # noqa: E402
+    Ledger,
+    run_validation_job,
+)
 from anomaly_detection_toolkit_spark.session import get_spark  # noqa: E402
+from anomaly_detection_toolkit_spark.sources.iceberg import (  # noqa: E402
+    iceberg_available,
+    jar_status,
+    read_table,
+)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -168,74 +179,45 @@ def main(argv: list[str] | None = None) -> int:
         checks = extended_suite(rolling_window=args.drift_rolling)
     elif args.drift_rolling is not None:
         ap.error("--drift-rolling requires --drift-primitives")
+    if args.format == "iceberg" and not iceberg_available(spark):
+        print(f"--format iceberg unavailable: {jar_status(spark)}")
+        return 2
     t0 = time.perf_counter()
-    if args.format == "iceberg":
-        from anomaly_detection_toolkit_spark.sources.iceberg import (
-            iceberg_available,
-            jar_status,
-            run_validation_job_iceberg,
-        )
-
-        if not iceberg_available(spark):
-            print(f"--format iceberg unavailable: {jar_status(spark)}")
-            return 2
-        result = run_validation_job_iceberg(
-            spark,
-            args.input,
-            args.output,
-            checks=checks,
-            part_col=args.part_col,
-            snapshot_id=args.snapshot_id,
-            violations_cap=args.violations_cap,
-        )
-    else:
-        result = run_validation_job(
-            spark,
-            args.input,
-            args.output,
-            checks=checks,
-            part_col=args.part_col,
-            incremental=args.incremental,
-            violations_cap=args.violations_cap,
-        )
+    result = run_validation_job(
+        spark,
+        args.input,
+        args.output,
+        checks=checks,
+        part_col=args.part_col,
+        incremental=args.incremental,
+        violations_cap=args.violations_cap,
+        table_format=args.format,
+        snapshot_id=args.snapshot_id,
+    )
     dt = time.perf_counter() - t0
     if result is None:
         print(f"nothing to do: snapshot already fully validated ({dt:.1f}s)")
-        # history drift only needs the EXISTING metrics sink — honor
-        # the flag even when no new validation ran
-        if args.history_drift:
-            _run_history_drift(spark, args)
-        if args.quarantine:
-            print(
-                "quarantine: skipped — needs a validation run's "
-                "violations (nothing was validated)"
-            )
-        if args.clean_output:
-            # the ids come from the violations SINK, which exists from
-            # prior runs — a nothing-to-do rerun can still (re)write
-            # the clean view
-            _write_clean_output(spark, args)
-        if args.compact_sinks:
-            _compact(spark, args)
-        return 0
-    verdicts = result.verdicts.collect()
-    n_fail = sum(1 for r in verdicts if r["verdict"] == -1)
-    print(
-        f"validated parts={result.parts_checked} cells={len(verdicts)} "
-        f"failed_cells={n_fail} wall={dt:.1f}s outputs={args.output}"
-    )
-    for r in verdicts:
-        if r["verdict"] == -1:
-            print(f"  FAIL part={r['part']} check={r['check']} errors={r['n_errors']}")
-    if args.quarantine:
+    else:
+        verdicts = result.verdicts.collect()
+        n_fail = sum(1 for r in verdicts if r["verdict"] == -1)
+        print(
+            f"validated parts={result.parts_checked} cells={len(verdicts)} "
+            f"failed_cells={n_fail} wall={dt:.1f}s outputs={args.output}"
+        )
+        for r in verdicts:
+            if r["verdict"] == -1:
+                print(f"  FAIL part={r['part']} check={r['check']} errors={r['n_errors']}")
+    if args.quarantine and result is None:
+        print(
+            "quarantine: skipped — needs a validation run's "
+            "violations (nothing was validated)"
+        )
+    elif args.quarantine:
         import os
 
         from pyspark.sql import functions as F
 
-        from anomaly_detection_toolkit_spark.plans.runner import (
-            Ledger,
-            quarantine_ids,
-        )
+        from anomaly_detection_toolkit_spark.plans.runner import quarantine_ids
 
         # tag the id list with the run that produced it (same lineage
         # as the other sinks) so the dir can accumulate across runs
@@ -252,6 +234,9 @@ def main(argv: list[str] | None = None) -> int:
             f"quarantine: {ids.count()} entity ids "
             f"(run_seq={last['run_seq']}) -> {qpath}"
         )
+    # the clean view reads the violations SINK and history drift the
+    # metrics sink, both of which exist from prior runs — a
+    # nothing-to-do rerun still honours these flags
     if args.clean_output:
         _write_clean_output(spark, args)
     if args.history_drift:
@@ -283,8 +268,6 @@ def _write_clean_output(spark, args) -> None:
             "cap when the clean table must be complete"
         )
     if args.format == "iceberg":
-        from anomaly_detection_toolkit_spark.sources.iceberg import read_table
-
         src = read_table(spark, args.input, snapshot_id=args.snapshot_id)
     else:
         src = spark.read.parquet(args.input)
@@ -337,6 +320,7 @@ def _run_history_drift(spark, args) -> None:
     from anomaly_detection_toolkit_spark.plans.history import (
         history_drift,
         history_violations,
+        restrict_to_recorded_runs,
     )
 
     metrics = (
@@ -350,16 +334,8 @@ def _run_history_drift(spark, args) -> None:
     # the ledger never recorded — those partial-run rows must not
     # count as a full run in every future baseline (see
     # plans.history.restrict_to_recorded_runs)
-    from anomaly_detection_toolkit_spark.plans.history import (
-        restrict_to_recorded_runs,
-    )
-    from anomaly_detection_toolkit_spark.plans.runner import Ledger as _L
-
-    recorded = {
-        int(r["run_seq"])
-        for r in _L(os.path.join(args.output, "_ledger")).load().get("runs", [])
-        if r.get("run_seq") is not None
-    }
+    runs = Ledger(os.path.join(args.output, "_ledger")).load().get("runs", [])
+    recorded = {int(r["run_seq"]) for r in runs if r.get("run_seq") is not None}
     metrics = restrict_to_recorded_runs(metrics, recorded)
     n_runs = metrics.select("run_seq").where(F.col("run_seq").isNotNull()).distinct().count()
     if n_runs < 2:
@@ -387,9 +363,6 @@ def _run_history_drift(spark, args) -> None:
         print("history-drift: no scorable cells")
         scored.unpersist()
         return
-    from anomaly_detection_toolkit_spark.plans.runner import Ledger
-
-    runs = Ledger(os.path.join(args.output, "_ledger")).load().get("runs", [])
     snap_id = next(
         (str(r["snapshot_id"]) for r in reversed(runs)
          if int(r.get("run_seq", -1)) == int(cur)),
